@@ -126,9 +126,10 @@ def compact_postings(
     (the reference's collapseThresh skip), short neighbors are decoded,
     concatenated and re-encoded into ``run_size`` chunks.
 
-    Input partitions must be (term, start_did)-sorted (the on-disk
-    postings layout) — compaction happens within a partition, exactly as
-    the reference compacts within its key-range buckets, so a term split
+    Each input partition is sorted by (term, start_did) first: a plain
+    parquet read packs several files into one read task by size, not by
+    term order.  Compaction happens within a partition, exactly as the
+    reference compacts within its key-range buckets, so a term split
     across a partition boundary keeps one short run per side at worst.
     Streaming ingest and hierarchical merges are the producers of short
     runs; one compact pass restores query-time run geometry.
@@ -207,7 +208,9 @@ def compact_postings(
         if out:
             yield pd.DataFrame(out, columns=cols)
 
-    return postings.mapInPandas(kernel, POSTINGS_SCHEMA)
+    return postings.sortWithinPartitions("term", "start_did").mapInPandas(
+        kernel, POSTINGS_SCHEMA
+    )
 
 
 def compact_index(
@@ -225,16 +228,10 @@ def compact_index(
     h = open_index(spark, src_dir)
     paths = IndexPaths(dst_dir)
     os.makedirs(dst_dir, exist_ok=True)
-    # compact_postings requires (term, start_did)-sorted partitions; a
-    # plain parquet read does NOT guarantee that (FileSourceScanExec
-    # packs small files into read tasks by size, not term order — the
-    # same packing hazard index_build scopes openCostInBytes around).
-    # One range shuffle both restores the invariant and co-locates ALL
-    # of a term's short runs, so compaction is maximal, not per-file.
-    sorted_postings = h.postings.repartitionByRange(
-        "term", "start_did"
-    ).sortWithinPartitions("term", "start_did")
-    compact_postings(sorted_postings, run_size=run_size, min_run=min_run).write.mode(
+    # one range shuffle co-locates ALL of a term's short runs, so
+    # compaction is maximal, not per read task
+    ranged = h.postings.repartitionByRange("term", "start_did")
+    compact_postings(ranged, run_size=run_size, min_run=min_run).write.mode(
         "overwrite"
     ).option("maxRecordsPerFile", 0).parquet(paths.postings)
     h.docmeta.write.mode("overwrite").parquet(os.path.join(dst_dir, "docmeta"))

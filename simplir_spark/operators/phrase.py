@@ -97,34 +97,19 @@ def phrase_match_positional(
     post = index.postings.filter(F.col("term").isin(terms_needed))
     if "pos" not in post.columns:
         raise ValueError("index was not built with_positions=True")
-    if n_shards is None:
-        from simplir_spark.operators.query_indexed import _pick_n_shards
-
-        par = spark.sparkContext.defaultParallelism
-        # same span floor as the scorers: runs span many dids, narrow
-        # shards duplicate every run (see query_indexed._MIN_SHARD_SPAN)
-        n_shards = _pick_n_shards(par, len(phrases), index.doc_count, "query_shard")
-    span = max(1, -(-max(1, index.doc_count) // n_shards))
+    from simplir_spark.localdf import local_rows_df
+    from simplir_spark.operators.query_indexed import route_runs_to_shards
 
     rows = [(pid, t, j) for pid, p in phrases for j, t in enumerate(p)]
-    from simplir_spark.localdf import local_rows_df
-
     pdf_phrases = local_rows_df(spark, rows, "phrase_id string, term string, term_ix int")
-    matched = (
-        post.join(F.broadcast(pdf_phrases), "term")
-        .withColumn(
-            "shard",
-            F.explode(
-                F.sequence(
-                    (F.col("start_did") / span).cast("long"),
-                    (F.col("end_did") / span).cast("long"),
-                )
-            ),
-        )
-        .select(
-            "phrase_id", "shard", "term_ix", "term", "start_did", "n",
-            "deltas", "tfs", "dls", "pos",
-        )
+    # same shard router (and span floor) as the indexed scorers
+    routed, span = route_runs_to_shards(
+        spark, post.join(F.broadcast(pdf_phrases), "term"), len(phrases),
+        index.doc_count, n_shards=n_shards,
+    )
+    matched = routed.select(
+        "phrase_id", "shard", "term_ix", "term", "start_did", "n",
+        "deltas", "tfs", "dls", "pos",
     )
     phrase_len = {pid: len(p) for pid, p in phrases}
 

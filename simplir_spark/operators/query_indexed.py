@@ -1,20 +1,34 @@
-"""Indexed BM25 top-k (EP2: SimpleIndex.score, SURVEY.md §3) with
-block-max pruning.
+"""Indexed top-k retrieval (EP2: SimpleIndex.score, SURVEY.md §3) with
+block-max pruning, generic over the retrieval model.
 
-Plan shape:
+As in the reference, the index does not depend on the model: BM25 and
+Dirichlet query likelihood are plug-ins over ONE scoring loop
+(``RetrievalModel``, SimpleIndex.hs:159-165).  A model supplies
+
+  * ``contrib(t, tf, dl)`` — a term's per-posting score contribution;
+  * ``bound(t, max_tf)``   — an upper bound of that contribution;
+  * ``unseen(rest)``       — the best final score of a doc not yet seen
+    when the remaining terms can add at most ``rest``;
+  * ``finalize(acc, dl)``  — accumulated contributions -> final scores;
+  * ``required``           — terms a doc must contain to score above
+    -inf (QL's cf=0 terms); pruning is off while any exist.
+
+Plan shape (``_indexed_topk``, shared by every model and grouping):
   postings table — parquet scan with ``term IN (query terms)`` pushed down
   (the Spark analog of the reference's term->offset index lookup,
-  TermIndex.hs:26-34) → broadcast join with the (query_id, term) table →
-  ``groupBy(query_id).applyInPandas`` numpy scorer → top-k → broadcast
-  join against docmeta for doc_key resolution.
+  TermIndex.hs:26-34) → broadcast join with the (query_id, term) table
+  (``grouping="query_shard"`` only) → each run routed to every did-range
+  shard it overlaps → ``applyInPandas`` DAAT scorer per group → per-query
+  window rank → doc_key resolution against docmeta.
 
-The scorer is document-at-a-time over decoded runs (collectPostings'
-k-way union, Posting2/Collect.hs:53-82, vectorized) with an exact
-block-max skip rule in the spirit of Block-Max WAND [Ding & Suel 2011]
-and the reference's lazily-thresholded top-k fold (TopK.hs:36-70):
+The scorer (``daat_topk``) is document-at-a-time over decoded runs
+(collectPostings' k-way union, Posting2/Collect.hs:53-82, vectorized)
+with an exact block-max skip rule in the spirit of Block-Max WAND
+[Ding & Suel 2011] and the reference's lazily-thresholded top-k fold
+(TopK.hs:36-70):
 
   * terms processed in descending score upper bound;
-  * a run is decoded only if (a) undiscovered docs could still reach the
+  * a run is decoded only if (a) an unseen doc could still reach the
     current kth score via the remaining terms' upper bounds, or (b) the
     run's did range contains a *live* candidate (current score + remaining
     potential >= threshold).
@@ -26,9 +40,11 @@ bounds its final score from above), so all its runs are decoded.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from simplir_spark.cacheutil import CacheRegistry
@@ -36,13 +52,6 @@ from simplir_spark.functions import codec
 from simplir_spark.functions.scoring import B_DEFAULT, K1_DEFAULT
 from simplir_spark.operators.index_build import IndexHandle
 from simplir_spark.operators.query import merge_query_entries, queries_df
-
-# theta-seeding auto-gate: measured crossover on local[16] lies between 4M
-# docs (seeding -7%) and 16M (first win, +2.5% BM25 / +11% QL) at 16
-# shards — BENCH/seed_threshold.json (500k), BENCH/seed_threshold_4m.json
-# (4M + 16M).  Gate at the measured-win point; callers on real clusters
-# where per-shard decode dominates can force seed_threshold=True.
-_SEED_MIN_DOCS = 16_000_000
 
 # Minimum did-span per shard.  A posting run covers up to 2^14 postings
 # whose did range routinely spans tens of thousands of dids, so shards
@@ -56,6 +65,8 @@ _SEED_MIN_DOCS = 16_000_000
 # affects results (per-shard top-k + global window rank is exact at any
 # sharding).
 _MIN_SHARD_SPAN = 1 << 16
+# Maximum did-span per shard: the scorer's dense accumulators are O(span).
+_MAX_SHARD_SPAN = 1 << 22
 
 
 def _pick_n_shards(par: int, n_queries: int, doc_count: int, grouping: str) -> int:
@@ -64,15 +75,227 @@ def _pick_n_shards(par: int, n_queries: int, doc_count: int, grouping: str) -> i
     always enough to keep spans dense-accumulator-sized (<= 2^22)."""
     per_q = (2 * par) if grouping == "shard" else (2 * par) // max(1, n_queries)
     hi = -(-max(1, doc_count) // _MIN_SHARD_SPAN)
-    lo = -(-doc_count // (1 << 22))
+    lo = -(-doc_count // _MAX_SHARD_SPAN)
     return max(1, min(max(1, per_q), hi), lo)
 
 
-def _bm25_contrib(tfs: np.ndarray, dls: np.ndarray, idf: float,
-                  avg_doc_len: float, k1: float, b: float) -> np.ndarray:
-    tf = tfs.astype(np.float64)
-    denom = tf + k1 * (1.0 - b + b * dls.astype(np.float64) / avg_doc_len)
-    return idf * tf * (k1 + 1.0) / denom
+def route_runs_to_shards(
+    spark: SparkSession,
+    runs: DataFrame,
+    n_groups: int,
+    doc_count: int,
+    grouping: str = "query_shard",
+    n_shards: int | None = None,
+) -> tuple[DataFrame, int]:
+    """(runs with a ``shard`` column, shard span): each run row is routed
+    to every did-range shard its [start_did, end_did] overlaps
+    (``F.sequence`` + explode, <= 2 shards per run in practice).  A doc's
+    postings then all live in exactly one shard, so per-shard results
+    union exactly.  ``n_shards`` defaults to ``_pick_n_shards`` and is
+    raised, if needed, to keep every span <= ``_MAX_SHARD_SPAN``."""
+    if n_shards is None:
+        par = spark.sparkContext.defaultParallelism
+        n_shards = _pick_n_shards(par, n_groups, doc_count, grouping)
+    n_shards = max(n_shards, -(-doc_count // _MAX_SHARD_SPAN))
+    span = max(1, -(-max(1, doc_count) // n_shards))  # ceil
+    shard = F.explode(
+        F.sequence(
+            (F.col("start_did") / span).cast("long"),
+            (F.col("end_did") / span).cast("long"),
+        )
+    )
+    return runs.withColumn("shard", shard), span
+
+
+class BM25Model:
+    """Okapi BM25 (BM25.hs:48-59): idf * tf(k1+1) / (tf + k1(1-b+b dl/avgdl)).
+    ``df`` maps each scored term to its document frequency."""
+
+    required: tuple = ()
+
+    def __init__(self, df: dict, doc_count: int, avg_doc_len: float,
+                 k1: float = K1_DEFAULT, b: float = B_DEFAULT):
+        self.idf = {
+            t: float(np.log(1.0 + (doc_count - int(d) + 0.5) / (int(d) + 0.5)))
+            for t, d in df.items()
+        }
+        self.avg_doc_len, self.k1, self.b = avg_doc_len, k1, b
+
+    def contrib(self, t, tf: np.ndarray, dl: np.ndarray) -> np.ndarray:
+        k1, b = self.k1, self.b
+        denom = tf + k1 * (1.0 - b + b * dl.astype(np.float64) / self.avg_doc_len)
+        return self.idf[t] * tf * (k1 + 1.0) / denom
+
+    def bound(self, t, max_tf: float) -> float:
+        # tf = max_tf, dl -> 0 maximizes the kernel
+        k1 = self.k1
+        return self.idf[t] * max_tf * (k1 + 1.0) / (max_tf + k1 * (1.0 - self.b))
+
+    def unseen(self, rest: float) -> float:
+        return rest
+
+    def finalize(self, acc: np.ndarray, dl: np.ndarray) -> np.ndarray:
+        return acc
+
+
+class DirichletQLModel:
+    """Dirichlet-smoothed query likelihood via the dense decomposition
+
+        score(d) = C0 + corr(d) - Q * ln(dl_d + mu)
+        C0       = sum_t qtf_t * ln(mu * bg_t)           (per query)
+        corr(d)  = sum_{t present in d} qtf_t * (ln(tf + mu*bg_t) - ln(mu*bg_t))
+        Q        = sum_t qtf_t
+
+    — mathematically the per-term sum of ln((tf + mu*bg)/(dl + mu))
+    (QueryLikelihood.hs:58-62).  Every corr contribution is STRICTLY
+    POSITIVE for tf >= 1, so a seen doc's partial score is a lower bound
+    of its final score and the block-max rule applies.  An unseen doc's
+    best case is C0 + rest - Q*ln(mu) (dl >= 0).
+
+    Terms with cf = 0 (bg = 0) have probability 0: every matched doc
+    lacking them scores -inf; docs containing them fall back to
+    ln(tf/(dl+mu)).  They are ``required``, which turns pruning off — the
+    -inf finals break the partial-score lower bound.  C0, Q and the
+    required set cover ALL query terms, including those without runs in
+    the scored shard, so ``term_w``/``term_bg`` must hold every term.
+    """
+
+    def __init__(self, term_w: dict, term_bg: dict, mu: float):
+        self.w, self.mu = term_w, mu
+        self.bg = {t: term_bg.get(t, 0.0) for t in term_w}
+        self.base = {t: math.log(mu * bg) if bg > 0 else 0.0 for t, bg in self.bg.items()}
+        self.c0 = self.q_total = 0.0
+        for t in sorted(term_w):
+            self.q_total += term_w[t]
+            if self.bg[t] > 0:
+                self.c0 += term_w[t] * self.base[t]
+        self.required = [t for t in sorted(term_w) if self.bg[t] <= 0]
+        self.unseen_norm = self.q_total * math.log(mu)
+
+    def contrib(self, t, tf: np.ndarray, dl: np.ndarray) -> np.ndarray:
+        w, bg = self.w[t], self.bg[t]
+        if bg > 0:
+            return w * (np.log(tf + self.mu * bg) - self.base[t])
+        return w * np.log(tf)
+
+    def bound(self, t, max_tf: float) -> float:
+        w, bg = self.w[t], self.bg[t]
+        if bg > 0:
+            return w * (math.log(max_tf + self.mu * bg) - self.base[t])
+        # unused when pruning is off, but keep it a finite bound
+        return w * max(math.log(max(max_tf, 1.0)), 0.0)
+
+    def unseen(self, rest: float) -> float:
+        return self.c0 + rest - self.unseen_norm
+
+    def finalize(self, acc: np.ndarray, dl: np.ndarray) -> np.ndarray:
+        return self.c0 + acc - self.q_total * np.log(dl + self.mu)
+
+
+_NO_HITS = (np.zeros(0, dtype=np.int64), np.zeros(0))
+
+
+def daat_topk(
+    runs: pd.DataFrame,
+    model,
+    k: int,
+    did_lo: int | None,
+    did_hi: int | None,
+    decode_counter: list | None = None,
+    decode_cache: dict | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Score one query's posting runs; returns (top dids, top scores),
+    ties broken by ascending did.
+
+    ``runs`` columns: term, start_did, end_did, n, max_tf, deltas, tfs,
+    dls.  Only dids in [did_lo, did_hi) are scored — the shard contract:
+    every run overlapping the range must be present, postings outside it
+    are dropped after decode.  A None bound defaults to the runs' own did
+    range.  Scores accumulate in dense arrays over the range, O(postings)
+    per term.
+
+    ``decode_counter`` receives [decoded_runs, total_runs].
+    ``decode_cache`` (a dict keyed (term, start_did) -> decoded arrays)
+    memoizes run decodes ACROSS calls — the shard-grouped plan passes
+    one cache for all queries in a shard so a shared run decodes once.
+    """
+    if len(runs) == 0:
+        return _NO_HITS
+    if did_lo is None:
+        did_lo = int(runs["start_did"].min())
+    if did_hi is None:
+        did_hi = int(runs["end_did"].max()) + 1
+
+    terms = runs["term"].to_numpy()
+    ub = {t: model.bound(t, float(runs.loc[terms == t, "max_tf"].max())) for t in pd.unique(terms)}
+    order = sorted(ub, key=lambda t: -ub[t])
+    rest_after = {}  # ub of t + all later terms
+    tail = 0.0
+    for t in reversed(order):
+        tail += ub[t]
+        rest_after[t] = tail
+
+    span = did_hi - did_lo
+    acc = np.zeros(span)
+    dl = np.zeros(span, dtype=np.int64)
+    seen = np.zeros(span, dtype=bool)
+    required = set(model.required)
+    hits = np.zeros(span, dtype=np.int32) if required else None
+    seen_count = decoded = 0
+    for t in order:
+        rest = rest_after[t]
+        trun = runs[terms == t].sort_values("start_did")
+        decode = np.ones(len(trun), dtype=bool)
+        if not required and seen_count >= k:
+            ix = np.nonzero(seen)[0]
+            cand = model.finalize(acc[ix], dl[ix])
+            theta = float(np.partition(cand, -k)[-k])
+            # Skip a run's unseen docs only when the unseen bound is
+            # STRICTLY below theta: with b=0 the BM25 bound (dl->0) is
+            # exact at tf==max_tf, so a doc scoring exactly theta is
+            # attainable and the did tie-break could place it in the
+            # top-k.
+            if theta > model.unseen(rest):
+                # only runs overlapping live candidates matter
+                live = (ix + did_lo)[cand + rest >= theta]
+                lo = np.searchsorted(live, trun["start_did"].to_numpy(dtype=np.int64), side="left")
+                hi = np.searchsorted(live, trun["end_did"].to_numpy(dtype=np.int64), side="right")
+                decode = hi > lo
+
+        for row, dec in zip(trun.itertuples(index=False), decode):
+            if not dec:
+                continue
+            decoded += 1
+            ckey = (t, int(row.start_did))
+            got = decode_cache.get(ckey) if decode_cache is not None else None
+            if got is None:
+                got = codec.decode_run(row.start_did, row.n, row.deltas, row.tfs, row.dls)
+                if decode_cache is not None:
+                    decode_cache[ckey] = got
+            dids, tfs, dls = got
+            m = (dids >= did_lo) & (dids < did_hi)
+            if not m.any():
+                continue
+            # dids are unique within a term (runs have disjoint ranges)
+            off = dids[m] - did_lo
+            acc[off] += model.contrib(t, tfs[m].astype(np.float64), dls[m])
+            dl[off] = dls[m]
+            if t in required:
+                hits[off] += 1
+            seen_count += int(np.count_nonzero(~seen[off]))
+            seen[off] = True
+
+    if decode_counter is not None:
+        decode_counter[:] = [decoded, len(runs)]
+    ix = np.nonzero(seen)[0]
+    if len(ix) == 0:
+        return _NO_HITS
+    scores = model.finalize(acc[ix], dl[ix])
+    if required:
+        scores = np.where(hits[ix] == len(required), scores, float("-inf"))
+    dids_out = ix + did_lo
+    sel = np.lexsort((dids_out, -scores))[:k]
+    return dids_out[sel], scores[sel]
 
 
 def score_query_runs(
@@ -85,164 +308,11 @@ def score_query_runs(
     decode_counter: list | None = None,
     did_lo: int | None = None,
     did_hi: int | None = None,
-    theta0: float = float("-inf"),
     decode_cache: dict | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Score one query's posting runs; returns (top dids, top scores).
-
-    ``decode_cache`` (optional dict keyed (term, start_did) -> raw decoded
-    arrays) memoizes run decodes ACROSS calls — the shard-grouped scorer
-    passes one cache for all queries in a shard so a run shared by
-    several queries decodes once.
-
-    ``runs`` columns: term, start_did, end_did, n, max_tf, deltas, tfs, dls
-    plus per-term ``df``.  ``decode_counter`` (tests) receives
-    [decoded_runs, total_runs].  ``did_lo``/``did_hi`` restrict scoring to
-    dids in [lo, hi) — the shard contract: every run overlapping the range
-    must be present, postings outside it are dropped after decode.
-
-    ``theta0`` is an EXTERNAL score floor — any valid lower bound on the
-    final global k-th score (e.g. the k-th score of another shard).  It
-    deepens block-max pruning without affecting the global result:
-    pruning is strict (a skipped doc's upper bound <= theta, and actual
-    scores are strictly below their upper bounds), so every dropped doc
-    is strictly below theta0 and could never enter the global top-k.
-    The reference's streaming top-k maintains ONE threshold across the
-    whole corpus (TopK.hs:36-70); theta0 is the distributed analog —
-    shards prune against the best global bound known at launch instead
-    of only their local accumulation.
-    """
-    if len(runs) == 0:
-        return np.zeros(0, dtype=np.int64), np.zeros(0)
-
-    # per-term idf and upper bound (tf=max_tf, dl->0 maximizes the kernel)
-    terms = runs["term"].to_numpy()
-    uniq_terms = pd.unique(runs["term"])
-    idf_by_term = {}
-    ub_by_term = {}
-    for t in uniq_terms:
-        m = terms == t
-        df_t = int(runs.loc[m, "df"].iloc[0])
-        idf = float(np.log(1.0 + (doc_count - df_t + 0.5) / (df_t + 0.5)))
-        idf_by_term[t] = idf
-        max_tf = float(runs.loc[m, "max_tf"].max())
-        ub_by_term[t] = idf * max_tf * (k1 + 1.0) / (max_tf + k1 * (1.0 - b))
-
-    order = sorted(uniq_terms, key=lambda t: -ub_by_term[t])
-    rest_after = {}
-    acc = 0.0
-    for t in reversed(order):
-        acc += ub_by_term[t]
-        rest_after[t] = acc  # ub of t + all later terms
-
-    cand_dids = np.zeros(0, dtype=np.int64)
-    cand_scores = np.zeros(0)
-    decoded = 0
-    total = len(runs)
-
-    # dense shard-local accumulator: contiguous [did_lo, did_hi) ranges up
-    # to 4M docs score in O(postings) per term instead of the O(n log n)
-    # unique-merge (the sparse fallback for unbounded ranges)
-    span = (did_hi - did_lo) if (did_lo is not None and did_hi is not None) else None
-    dense = np.zeros(span) if span is not None and 0 < span <= (1 << 22) else None
-    seen = np.zeros(span, dtype=bool) if dense is not None else None
-
-    seen_count = 0
-    for t in order:
-        rest = rest_after[t]
-        if dense is not None and (seen_count >= k or theta0 > -np.inf):
-            # candidates only matter once pruning can engage (theta >
-            # -inf) — which an external theta0 makes true from the first
-            # term, so the live set MUST be refreshed then too: a doc
-            # already accumulated in dense stays live (partial + rest may
-            # beat theta) and skipping its runs would under-score it
-            ix = np.nonzero(seen)[0]
-            cand_dids = ix + did_lo
-            cand_scores = dense[ix]
-        if len(cand_scores) >= k:
-            theta = max(float(np.partition(cand_scores, -k)[-k]), theta0)
-        else:
-            theta = theta0
-        trun = runs[terms == t].sort_values("start_did")
-        idf = idf_by_term[t]
-
-        # Skip a run's unseen docs only when rest < theta STRICTLY: with
-        # b=0 the per-term upper bound (dl->0) is exact at tf==max_tf, so
-        # a doc scoring exactly theta is attainable and the did tie-break
-        # could place it in the global top-k — non-strict pruning would
-        # make seeded and unseeded shards disagree on such ties.
-        if theta <= rest:
-            decode_mask = np.ones(len(trun), dtype=bool)
-        else:
-            # only runs overlapping live candidates matter
-            live = cand_dids[cand_scores + rest >= theta]
-            starts = trun["start_did"].to_numpy(dtype=np.int64)
-            ends = trun["end_did"].to_numpy(dtype=np.int64)
-            if len(live) == 0:
-                decode_mask = np.zeros(len(trun), dtype=bool)
-            else:
-                lo = np.searchsorted(live, starts, side="left")
-                hi = np.searchsorted(live, ends, side="right")
-                decode_mask = hi > lo
-
-        new_dids = []
-        new_contribs = []
-        for row, dec in zip(trun.itertuples(index=False), decode_mask):
-            if not dec:
-                continue
-            decoded += 1
-            if decode_cache is not None:
-                ckey = (t, int(row.start_did))
-                cached = decode_cache.get(ckey)
-                if cached is None:
-                    cached = codec.decode_run(
-                        row.start_did, row.n, row.deltas, row.tfs, row.dls
-                    )
-                    decode_cache[ckey] = cached
-                dids, tfs, dls = cached
-            else:
-                dids, tfs, dls = codec.decode_run(
-                    row.start_did, row.n, row.deltas, row.tfs, row.dls
-                )
-            if did_lo is not None or did_hi is not None:
-                m = np.ones(len(dids), dtype=bool)
-                if did_lo is not None:
-                    m &= dids >= did_lo
-                if did_hi is not None:
-                    m &= dids < did_hi
-                dids, tfs, dls = dids[m], tfs[m], dls[m]
-                if len(dids) == 0:
-                    continue
-            new_dids.append(dids)
-            new_contribs.append(_bm25_contrib(tfs, dls, idf, avg_doc_len, k1, b))
-        if new_dids:
-            nd = np.concatenate(new_dids)
-            nc = np.concatenate(new_contribs)
-            if dense is not None:
-                # O(n) accumulate into the shard-local dense array
-                # (nd unique within a term: runs have disjoint did ranges)
-                off = nd - did_lo
-                seen_count += int(np.count_nonzero(~seen[off]))
-                np.add.at(dense, off, nc)
-                seen[off] = True
-            else:
-                all_dids = np.concatenate([cand_dids, nd])
-                all_scores = np.concatenate([cand_scores, nc])
-                cand_dids, inv = np.unique(all_dids, return_inverse=True)
-                cand_scores = np.bincount(inv, weights=all_scores)
-
-    if decode_counter is not None:
-        decode_counter[:] = [decoded, total]
-
-    if dense is not None:
-        ix = np.nonzero(seen)[0]
-        cand_dids = ix + did_lo
-        cand_scores = dense[ix]
-
-    if len(cand_dids) == 0:
-        return np.zeros(0, dtype=np.int64), np.zeros(0)
-    sel = np.lexsort((cand_dids, -cand_scores))[:k]
-    return cand_dids[sel], cand_scores[sel]
+    """BM25 ``daat_topk``; ``runs`` also carries each term's ``df``."""
+    model = BM25Model(dict(zip(runs["term"], runs["df"])), doc_count, avg_doc_len, k1, b)
+    return daat_topk(runs, model, k, did_lo, did_hi, decode_counter, decode_cache)
 
 
 def score_query_runs_ql(
@@ -254,386 +324,123 @@ def score_query_runs_ql(
     did_lo: int,
     did_hi: int,
     decode_counter: list | None = None,
-    theta0: float = -np.inf,
     decode_cache: dict | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Dirichlet-QL DAAT scoring with block-max run skipping — the QL
-    analog of ``score_query_runs`` (``decode_cache`` memoizes raw run
-    decodes across calls, as there).
-
-    Decomposition (see ``ql_dirichlet_indexed``):
-        score(d) = C0 + corr(d) - Q * ln(dl_d + mu)
-    where every per-term corr contribution is STRICTLY POSITIVE
-    (w*(ln(tf+mu*bg)-ln(mu*bg)) > 0 for tf >= 1), so a seen doc's partial
-    score is a valid lower bound of its final score and the BM25-style
-    threshold logic transfers:
-      * per-term upper bound ub_t = w_t*(ln(max_tf_t+mu*bg_t)-ln(mu*bg_t));
-      * terms processed in descending ub order; rest = ub of the current
-        and all later terms;
-      * an UNSEEN doc's best case is C0 + rest - Q*ln(0+mu) (dl >= 0), so
-        runs not overlapping live candidates are skipped only when
-        theta > that bound STRICTLY (exact ties stay decodable — the same
-        b=0-style tie rule as BM25);
-      * a seen doc stays live while partial + rest >= theta (its dl is
-        known, the normalization is already in the partial).
-
-    Terms with cf = 0 (bg = 0) make matched docs lacking them score -inf,
-    which breaks the partial-is-a-lower-bound invariant — pruning is
-    DISABLED for such queries (decode everything; results unchanged).
-
-    ``theta0`` is an external score floor (any valid lower bound on the
-    global k-th final score, e.g. another shard's k-th) — it engages
-    pruning from the first term, exactly as in ``score_query_runs``.
-
-    Returns (dids, scores) of the shard-local top-k; ``decode_counter``
-    (tests) receives [decoded_runs, total_runs].
-    """
-    import math
-
-    if len(runs) == 0:
-        return np.zeros(0, dtype=np.int64), np.zeros(0)
-
-    q_terms = sorted(term_w)
-    c0 = 0.0
-    q_total = 0.0
-    for t in q_terms:
-        w = term_w[t]
-        q_total += w
-        if term_bg.get(t, 0.0) > 0:
-            c0 += w * math.log(mu * term_bg[t])
-    cf0_terms = [t for t in q_terms if term_bg.get(t, 0.0) <= 0]
-    pruning_ok = not cf0_terms
-
-    terms = runs["term"].to_numpy()
-    uniq_terms = pd.unique(runs["term"])
-    ub_by_term = {}
-    base_by_term = {}
-    for t in uniq_terms:
-        m = terms == t
-        bg = term_bg.get(t, 0.0)
-        w = term_w[t]
-        base_by_term[t] = math.log(mu * bg) if bg > 0 else 0.0
-        max_tf = float(runs.loc[m, "max_tf"].max())
-        if bg > 0:
-            ub_by_term[t] = w * (math.log(max_tf + mu * bg) - base_by_term[t])
-        else:
-            # unused when pruning is disabled, but keep it a finite bound
-            ub_by_term[t] = w * max(math.log(max(max_tf, 1.0)), 0.0)
-
-    order = sorted(uniq_terms, key=lambda t: -ub_by_term[t])
-    rest_after = {}
-    acc = 0.0
-    for t in reversed(order):
-        acc += ub_by_term[t]
-        rest_after[t] = acc
-
-    span = did_hi - did_lo
-    corr = np.zeros(span)
-    dl_arr = np.zeros(span, dtype=np.int64)
-    seen = np.zeros(span, dtype=bool)
-    cf0_seen = np.zeros(span, dtype=np.int32)
-    seen_count = 0
-    decoded = 0
-    total = len(runs)
-    unseen_norm = q_total * math.log(mu)  # dl >= 0 maximizes -Q*ln(dl+mu)
-
-    for t in order:
-        rest = rest_after[t]
-        trun = runs[terms == t].sort_values("start_did")
-        w = term_w[t]
-        bg = term_bg.get(t, 0.0)
-        base = base_by_term[t]
-
-        if not pruning_ok or (seen_count < k and theta0 == -np.inf):
-            decode_mask = np.ones(len(trun), dtype=bool)
-        else:
-            ix = np.nonzero(seen)[0]
-            cand_scores = c0 + corr[ix] - q_total * np.log(dl_arr[ix] + mu)
-            theta = (
-                max(float(np.partition(cand_scores, -k)[-k]), theta0)
-                if len(ix) >= k
-                else theta0
-            )
-            if theta <= c0 + rest - unseen_norm:
-                decode_mask = np.ones(len(trun), dtype=bool)
-            else:
-                live = (ix + did_lo)[cand_scores + rest >= theta]
-                starts = trun["start_did"].to_numpy(dtype=np.int64)
-                ends = trun["end_did"].to_numpy(dtype=np.int64)
-                if len(live) == 0:
-                    decode_mask = np.zeros(len(trun), dtype=bool)
-                else:
-                    lo_i = np.searchsorted(live, starts, side="left")
-                    hi_i = np.searchsorted(live, ends, side="right")
-                    decode_mask = hi_i > lo_i
-
-        for row, dec in zip(trun.itertuples(index=False), decode_mask):
-            if not dec:
-                continue
-            decoded += 1
-            if decode_cache is not None:
-                ckey = (t, int(row.start_did))
-                cached = decode_cache.get(ckey)
-                if cached is None:
-                    cached = codec.decode_run(
-                        row.start_did, row.n, row.deltas, row.tfs, row.dls
-                    )
-                    decode_cache[ckey] = cached
-                dids, tfs, dls = cached
-            else:
-                dids, tfs, dls = codec.decode_run(
-                    row.start_did, row.n, row.deltas, row.tfs, row.dls
-                )
-            m = (dids >= did_lo) & (dids < did_hi)
-            if not m.any():
-                continue
-            off = dids[m] - did_lo
-            tf = tfs[m].astype(np.float64)
-            if bg > 0:
-                corr[off] += w * (np.log(tf + mu * bg) - base)
-            else:
-                corr[off] += w * np.log(tf)
-                cf0_seen[off] += 1
-            dl_arr[off] = dls[m]
-            new = ~seen[off]
-            seen_count += int(np.count_nonzero(new))
-            seen[off] = True
-
-    if decode_counter is not None:
-        decode_counter[:] = [decoded, total]
-
-    ix = np.nonzero(seen)[0]
-    if len(ix) == 0:
-        return np.zeros(0, dtype=np.int64), np.zeros(0)
-    scores = c0 + corr[ix] - q_total * np.log(dl_arr[ix] + mu)
-    if cf0_terms:
-        scores = np.where(cf0_seen[ix] == len(cf0_terms), scores, float("-inf"))
-    dids_out = ix + did_lo
-    sel = np.lexsort((dids_out, -scores))[:k]
-    return dids_out[sel], scores[sel]
+    """Dirichlet-QL ``daat_topk`` (see ``DirichletQLModel``)."""
+    model = DirichletQLModel(term_w, term_bg, mu)
+    return daat_topk(runs, model, k, did_lo, did_hi, decode_counter, decode_cache)
 
 
-def ql_dirichlet_indexed(
+def _indexed_topk(
     spark: SparkSession,
     index: IndexHandle,
     queries: list[tuple[str, list[str]]],
-    k: int = 10,
-    mu: float = 1000.0,
-    n_shards: int | None = None,
-    seed_threshold: bool | None = None,
-    grouping: str = "query_shard",
+    model,
+    k: int,
+    n_shards: int | None,
+    grouping: str,
 ) -> DataFrame:
-    """Dirichlet-smoothed query likelihood over the inverted index — the
-    index is retrieval-model-generic like the reference's SimpleIndex
-    (RetrievalModel plug-in, SimpleIndex.hs:159-165).
+    """Top-k of every query against the index in one job.
 
-    Per (query, did-shard) the match-any doc set scores via the dense
-    decomposition
-
-        score(d) = C0 + corr(d) - Q * ln(dl_d + mu)
-        C0       = sum_t qtf_t * ln(mu * bg_t)           (per query)
-        corr(d)  = sum_{t present in d} qtf_t * (ln(tf + mu*bg_t) - ln(mu*bg_t))
-        Q        = sum_t qtf_t
-
-    so one dense array accumulates all terms' contributions in
-    O(postings) — mathematically the per-term sum of
-    ln((tf + mu*bg)/(dl + mu)) (QueryLikelihood.hs:58-62).  Terms with
-    cf = 0 have probability 0: every matched doc lacking them scores
-    -inf; docs containing them fall back to ln(tf/(dl+mu)).
-
-    Block-max run skipping (``score_query_runs_ql``): per-term upper
-    bounds on the positive corr contributions drive the same DAAT
-    threshold pruning as BM25 — disabled automatically for queries with
-    cf=0 terms, where -inf finals break the partial-score lower bound.
-    """
+    ``model(terms, stats)`` builds a query's scorer on the Spark driver
+    from its (qtf-preserving) term list and ``stats`` = {term: (df, cf)}
+    of the query terms present in the index.  The scorer sees ALL of the
+    query's terms in every shard, also those without runs there (QL's
+    C0, Q and cf=0 rule need them).  If no query term is indexed, the
+    stats lookup is the only Spark job."""
     queries = merge_query_entries(queries)
     if grouping not in ("query_shard", "shard"):
         raise ValueError(f"unknown grouping {grouping!r}")
-    qdf = queries_df(spark, queries)
-    doc_count, token_count = index.doc_count, index.token_count
-    if n_shards is None:
-        par = spark.sparkContext.defaultParallelism
-        n_shards = _pick_n_shards(par, len(queries), doc_count, grouping)
-    span = max(1, -(-max(1, doc_count) // n_shards))
-
     q_terms = sorted({t for _, terms in queries for t in terms})
-    cf_by_term = {
-        r["term"]: int(r["cf"])
+    stats = {
+        r["term"]: (int(r["df"]), int(r["cf"]))
         for r in index.term_stats.filter(F.col("term").isin(q_terms)).collect()
     }
-    qtf = {
-        (qid, t): sum(1 for x in terms if x == t)
-        for qid, terms in queries
-        for t in set(terms)
-    }
-    q_term_lists = {qid: sorted(set(terms)) for qid, terms in queries}
+    if not stats:
+        return _empty_result(spark, index)
+    models = {qid: model(terms, stats) for qid, terms in queries}
 
-    post = index.postings.filter(F.col("term").isin(q_terms))
-    matched = (
-        post.join(F.broadcast(qdf), "term")
-        .withColumn(
-            "shard",
-            F.explode(
-                F.sequence(
-                    (F.col("start_did") / span).cast("long"),
-                    (F.col("end_did") / span).cast("long"),
-                )
-            ),
-        )
-        .select(
-            "query_id", "shard", "term", "start_did", "end_did", "n", "max_tf",
-            "deltas", "tfs", "dls",
-        )
+    post = index.postings.filter(F.col("term").isin(q_terms))  # parquet pushdown
+    keys = ["shard"]
+    if grouping == "query_shard":
+        post = post.join(F.broadcast(queries_df(spark, queries)), "term")
+        keys = ["query_id", "shard"]
+    routed, span = route_runs_to_shards(
+        spark, post, len(queries), index.doc_count, grouping, n_shards
     )
+    matched = routed.select(
+        *keys, "term", "start_did", "end_did", "n", "max_tf", "deltas", "tfs", "dls"
+    )
+    q_lists = {qid: sorted(set(terms)) for qid, terms in queries}
 
-    def make_score_group(theta0_map: dict):
-        def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            qid = pdf["query_id"].iloc[0]
-            shard = int(pdf["shard"].iloc[0])
-            lo, hi = shard * span, min((shard + 1) * span, max(doc_count, 1))
-            terms_q = q_term_lists[qid]
-            term_w = {t: float(qtf[(qid, t)]) for t in terms_q}
-            term_bg = {
-                t: (cf_by_term.get(t, 0) / token_count if token_count else 0.0)
-                for t in terms_q
+    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        lo = int(pdf["shard"].iloc[0]) * span
+        if "query_id" in pdf.columns:  # one query's runs
+            groups, cache = [(pdf["query_id"].iloc[0], pdf)], None
+        else:
+            # every query scored against one shared decode cache, so each
+            # matched run ships and decodes ONCE whatever the query count
+            groups = ((q, pdf[pdf["term"].isin(ts)]) for q, ts in sorted(q_lists.items()))
+            cache = {}
+        out_qid, out_did, out_score = [], [], []
+        for qid, runs in groups:
+            if len(runs) == 0:
+                continue
+            dids, scores = daat_topk(runs, models[qid], k, lo, lo + span, decode_cache=cache)
+            out_qid += [qid] * len(dids)
+            out_did.append(dids)
+            out_score.append(scores)
+        return pd.DataFrame(
+            {
+                "query_id": pd.Series(out_qid, dtype=object),
+                "did": np.concatenate(out_did) if out_did else np.zeros(0, dtype=np.int64),
+                "score": np.concatenate(out_score) if out_score else np.zeros(0),
             }
-            dids_out, scores = score_query_runs_ql(
-                pdf, term_w, term_bg, mu, k, lo, max(hi, lo + 1),
-                theta0=theta0_map.get(qid, -np.inf),
-            )
-            if len(dids_out) == 0:
-                return pd.DataFrame({"query_id": [], "did": [], "score": []}).astype(
-                    {"query_id": str, "did": np.int64, "score": np.float64}
-                )
-            return pd.DataFrame({"query_id": qid, "did": dids_out, "score": scores})
-
-        return score_group
-
-    from pyspark.sql import Window
-
-    group_schema = "query_id string, did long, score double"
-    # Cross-shard theta seeding (same design + auto-gate as bm25_indexed):
-    # a seed pass on each query's densest shard yields a global k-th lower
-    # bound that deepens every other shard's pruning.  Auto-gated on BOTH
-    # >= 8 shards AND a decode-heavy corpus (>= 16M docs): the seed pass
-    # is one extra fixed-cost job; interleaved A/Bs at 16 shards measured
-    # a net ~20% SLOWDOWN at 500k docs (BENCH/seed_threshold.json), still
-    # -7% at 4M, and the first WIN at 16M (+2.5% BM25 / +11% QL,
-    # BENCH/seed_threshold_4m.json) — the savings only amortize once each
-    # shard's decode work dominates the job overhead.
-    theta0_by_query: dict[str, float] = {}
-    if seed_threshold is None:
-        seed_threshold = (
-            grouping == "query_shard" and n_shards >= 8 and doc_count >= _SEED_MIN_DOCS
-        )
-    if seed_threshold and grouping == "query_shard" and n_shards > 1:
-        mass = matched.groupBy("query_id", "shard").agg(F.sum("n").alias("_mass"))
-        w0 = Window.partitionBy("query_id").orderBy(F.desc("_mass"), F.asc("shard"))
-        seed_sel = (
-            mass.withColumn("_r", F.row_number().over(w0))
-            .filter(F.col("_r") == 1)
-            .select("query_id", "shard")
-        )
-        seed_local = (
-            matched.join(F.broadcast(seed_sel), ["query_id", "shard"])
-            .groupBy("query_id", "shard")
-            .applyInPandas(make_score_group({}), group_schema)
-        )
-        for r in (
-            seed_local.filter(~F.isnan("score") & (F.col("score") > float("-inf")))
-            .groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("c"), F.min("score").alias("mn"))
-            .collect()
-        ):
-            if int(r["c"]) >= k:
-                theta0_by_query[r["query_id"]] = float(r["mn"])
-
-    if grouping == "shard":
-        # one group per did-shard, all queries scored against a shared
-        # decode cache — each run ships/decodes once regardless of query
-        # count (same trade-offs as bm25_indexed(grouping='shard'):
-        # BENCH/query_grouping.json; theta seeding stays query_shard)
-        matched_s = post.withColumn(
-            "shard",
-            F.explode(
-                F.sequence(
-                    (F.col("start_did") / span).cast("long"),
-                    (F.col("end_did") / span).cast("long"),
-                )
-            ),
-        ).select(
-            "shard", "term", "start_did", "end_did", "n", "max_tf",
-            "deltas", "tfs", "dls",
         )
 
-        def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            shard = int(pdf["shard"].iloc[0])
-            lo, hi = shard * span, min((shard + 1) * span, max(doc_count, 1))
-            cache: dict = {}
-            shard_terms = set(pdf["term"])
-            out_qid, out_did, out_score = [], [], []
-            for qid in sorted(q_term_lists):
-                terms_q = q_term_lists[qid]
-                if not any(t in shard_terms for t in terms_q):
-                    continue
-                sub = pdf[pdf["term"].isin(terms_q)]
-                term_w = {t: float(qtf[(qid, t)]) for t in terms_q}
-                term_bg = {
-                    t: (cf_by_term.get(t, 0) / token_count if token_count else 0.0)
-                    for t in terms_q
-                }
-                dids_out, scores = score_query_runs_ql(
-                    sub, term_w, term_bg, mu, k, lo, max(hi, lo + 1),
-                    decode_cache=cache,
-                )
-                out_qid.extend([qid] * len(dids_out))
-                out_did.append(dids_out)
-                out_score.append(scores)
-            if not out_qid:
-                return pd.DataFrame({"query_id": [], "did": [], "score": []}).astype(
-                    {"query_id": str, "did": np.int64, "score": np.float64}
-                )
-            return pd.DataFrame(
-                {
-                    "query_id": out_qid,
-                    "did": np.concatenate(out_did),
-                    "score": np.concatenate(out_score),
-                }
-            )
-
-        local_topk = matched_s.groupBy("shard").applyInPandas(
-            score_shard, group_schema
-        )
-    else:
-        local_topk = matched.groupBy("query_id", "shard").applyInPandas(
-            make_score_group(theta0_by_query), group_schema
-        )
+    local_topk = matched.groupBy(*keys).applyInPandas(
+        score_group, "query_id string, did long, score double"
+    )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("did"))
     topk = (
         local_topk.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "did", F.col("rank").cast("int").alias("rank"), "score")
     )
-    return _resolve_doc_keys(spark, index, topk)
+    return _resolve_doc_keys(spark, index, topk, len(queries) * k)
 
 
 _live_topk_caches = CacheRegistry(retain=4)
+
+
+def _empty_result(spark: SparkSession, index: IndexHandle) -> DataFrame:
+    key_type = index.docmeta.schema["doc_key"].dataType.simpleString()
+    return spark.createDataFrame(
+        [], f"query_id string, doc_key {key_type}, rank int, score double"
+    )
 
 # max dids to embed as an In-literal for docmeta row-group pruning; above
 # this the literal's plan cost outweighs the pruning win (measured wall for
 # Catalyst literals in BENCH/bucket_udf_route.json informed the same cap)
 _RESOLVE_ISIN_MAX = 32768
+# max top-k rows (queries x k) to force-broadcast into the docmeta join;
+# above it the planner decides from the cached top-k's real size
+_RESOLVE_BROADCAST_MAX = 1 << 20
 
 
-def _resolve_doc_keys(spark: SparkSession, index: IndexHandle, topk: DataFrame) -> DataFrame:
-    """doc_key resolution for a (query_id, did, rank, score) top-k.
+def _resolve_doc_keys(
+    spark: SparkSession, index: IndexHandle, topk: DataFrame, max_rows: int
+) -> DataFrame:
+    """doc_key resolution for a (query_id, did, rank, score) top-k of at
+    most ``max_rows`` rows.
 
-    The top-k is persisted (it is queries x k rows) and ONLY the distinct
-    dids are collected — they become an ``isin`` literal so the docmeta
-    scan keeps parquet min/max row-group pruning on the did-contiguous
-    partitions.  The returned plan joins docmeta against the REAL top-k
-    DataFrame (broadcast), so lineage/AQE stay intact — no
-    createDataFrame round-trip of the scores through the driver.
+    The top-k is persisted and ONLY the distinct dids are collected —
+    they become an ``isin`` literal so the docmeta scan keeps parquet
+    min/max row-group pruning on the did-contiguous partitions.  The
+    returned plan joins docmeta against the REAL top-k DataFrame, so
+    lineage/AQE stay intact — no createDataFrame round-trip of the
+    scores through the driver.  The top-k side is force-broadcast only
+    while ``max_rows`` <= ``_RESOLVE_BROADCAST_MAX``.
 
     Cache lifecycle: a lock-guarded bounded registry (``CacheRegistry``)
     retains the most recent persisted top-ks and evicts older ones, so
@@ -653,14 +460,10 @@ def _resolve_doc_keys(spark: SparkSession, index: IndexHandle, topk: DataFrame) 
     # literals).  Only the over-cap case pays a second aggregate.
     sample = topk.select("did").distinct().limit(_RESOLVE_ISIN_MAX + 1).collect()
     if not sample:
-        key_type = index.docmeta.schema["doc_key"].dataType.simpleString()
-        return spark.createDataFrame(
-            [], f"query_id string, doc_key {key_type}, rank int, score double"
-        )
+        return _empty_result(spark, index)
     meta = index.docmeta.select("did", "doc_key")
     if len(sample) <= _RESOLVE_ISIN_MAX:
         meta = meta.filter(F.col("did").isin(sorted(r["did"] for r in sample)))
-        joined = meta.join(F.broadcast(topk), "did")
     else:
         # did-range filter keeps parquet min/max row-group pruning on the
         # did-contiguous partitions
@@ -668,90 +471,12 @@ def _resolve_doc_keys(spark: SparkSession, index: IndexHandle, topk: DataFrame) 
         meta = meta.filter(
             (F.col("did") >= bounds["lo"]) & (F.col("did") <= bounds["hi"])
         )
-        # over the isin cap the top-k can be huge (10k queries x k=1000 =
-        # 10^7 rows) — a FORCED broadcast there risks driver/executor OOM
-        # (ADVICE r5): plain equi-join instead and let the planner pick;
-        # the range filter already bounded the docmeta side.
-        joined = meta.join(topk, "did")
-    return joined.select("query_id", "doc_key", "rank", "score")
-
-
-def _bm25_indexed_shard_grouped(
-    spark: SparkSession,
-    index: IndexHandle,
-    queries: list[tuple[str, list[str]]],
-    post: DataFrame,
-    k: int,
-    k1: float,
-    b: float,
-    span: int,
-) -> DataFrame:
-    """bm25_indexed's ``grouping="shard"`` body: one group per did-shard,
-    every query scored inside it against a shared per-shard decode cache.
-    The matched runs never join the query table, so the shuffle carries
-    each run's blobs exactly once however many queries share its term."""
-    doc_count, avg_doc_len = index.doc_count, index.avg_doc_len
-    q_terms = sorted({t for _, terms in queries for t in terms})
-    q_term_lists = {qid: sorted(set(terms)) for qid, terms in queries}
-    matched = (
-        post.join(F.broadcast(index.term_stats.filter(F.col("term").isin(q_terms))), "term")
-        .withColumn(
-            "shard",
-            F.explode(
-                F.sequence(
-                    (F.col("start_did") / span).cast("long"),
-                    (F.col("end_did") / span).cast("long"),
-                )
-            ),
-        )
-        .select(
-            "shard", "term", "df", "start_did", "end_did", "n",
-            "max_tf", "deltas", "tfs", "dls",
-        )
-    )
-
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        lo, hi = shard * span, (shard + 1) * span
-        cache: dict = {}
-        out_qid, out_did, out_score = [], [], []
-        shard_terms = set(pdf["term"])
-        for qid in sorted(q_term_lists):
-            terms_q = [t for t in q_term_lists[qid] if t in shard_terms]
-            if not terms_q:
-                continue
-            sub = pdf[pdf["term"].isin(terms_q)]
-            dids, scores = score_query_runs(
-                sub, doc_count, avg_doc_len, k, k1, b,
-                did_lo=lo, did_hi=hi, decode_cache=cache,
-            )
-            out_qid.extend([qid] * len(dids))
-            out_did.append(dids)
-            out_score.append(scores)
-        if not out_qid:
-            return pd.DataFrame({"query_id": [], "did": [], "score": []}).astype(
-                {"query_id": str, "did": np.int64, "score": np.float64}
-            )
-        return pd.DataFrame(
-            {
-                "query_id": out_qid,
-                "did": np.concatenate(out_did),
-                "score": np.concatenate(out_score),
-            }
-        )
-
-    from pyspark.sql import Window
-
-    local_topk = matched.groupBy("shard").applyInPandas(
-        score_group, "query_id string, did long, score double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("did"))
-    topk = (
-        local_topk.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "did", F.col("rank").cast("int").alias("rank"), "score")
-    )
-    return _resolve_doc_keys(spark, index, topk)
+    # a FORCED broadcast of a huge top-k (10k queries x k=1000 = 10^7
+    # rows) risks driver/executor OOM (ADVICE r5): past the row cap the
+    # planner picks the join from the cached top-k's real size
+    if max_rows <= _RESOLVE_BROADCAST_MAX:
+        topk = F.broadcast(topk)
+    return meta.join(topk, "did").select("query_id", "doc_key", "rank", "score")
 
 
 def bm25_indexed(
@@ -762,10 +487,9 @@ def bm25_indexed(
     k1: float = K1_DEFAULT,
     b: float = B_DEFAULT,
     n_shards: int | None = None,
-    seed_threshold: bool | None = None,
     grouping: str = "query_shard",
 ) -> DataFrame:
-    """All queries against the index in one job.
+    """BM25 top-k of all queries against the index in one job.
 
     ``grouping`` picks the scoring-group shape:
       * ``"query_shard"`` (default): one group per (query, did-shard) —
@@ -775,121 +499,48 @@ def bm25_indexed(
         it with a shared decode cache — each matched run crosses the wire
         and decodes exactly ONCE regardless of query count.  The right
         shape for large query batches over overlapping vocabulary (term
-        grids, query logs), where per-query duplication dominates; theta
-        seeding stays a query_shard feature.
+        grids, query logs), where per-query duplication dominates.
 
     Returns (query_id, doc_key, rank, score).  Rank ties break by did,
     which by construction equals doc_key order (dense ids are assigned in
     doc_key order — index_build).
 
-    Scoring parallelism is (queries × did-range shards), not just queries:
-    each run row is routed to every shard its [start_did, end_did] range
-    overlaps (``F.sequence`` + explode, ≤2 shards per run in practice), a
-    shard scores only dids inside its range — a doc's complete score lives
-    in exactly one shard, so per-shard top-k then a global window rank is
-    exact (the distributed form of collectPostings' doc-at-a-time union,
+    Scoring parallelism is (queries × did-range shards), not just queries
+    (``route_runs_to_shards``): a doc's complete score lives in exactly
+    one shard, so per-shard top-k then a global window rank is exact (the
+    distributed form of collectPostings' doc-at-a-time union,
     Posting2/Collect.hs:53-82).
-
-    ``seed_threshold`` (None = auto: on from 8 shards up): the
-    reference's streaming top-k maintains ONE threshold over the whole
-    corpus (TopK.hs:36-70), whereas independent shards each start from
-    theta = -inf and late shards decode runs a global threshold would
-    skip.  A cheap SEED PASS first scores each query's densest shard
-    (most matched postings — a metadata-only aggregation picks it); its
-    k-th score is a valid lower bound on the global k-th score and is
-    handed to every shard of the main pass as the pruning floor
-    (``score_query_runs(theta0=...)``).  Exactness is preserved — docs
-    pruned under theta0 are strictly below it, and the global k-th is >=
-    theta0.  Cost: one shard per query is scored twice (~1/n_shards extra
-    work) buying first-term pruning everywhere else.
     """
-    queries = merge_query_entries(queries)
-    if grouping not in ("query_shard", "shard"):
-        raise ValueError(f"unknown grouping {grouping!r}")
-    qdf = queries_df(spark, queries)
     doc_count, avg_doc_len = index.doc_count, index.avg_doc_len
-    if n_shards is None:
-        par = spark.sparkContext.defaultParallelism
-        n_shards = _pick_n_shards(par, len(queries), doc_count, grouping)
-    span = max(1, -(-max(1, doc_count) // n_shards))  # ceil
 
-    q_terms = sorted({t for _, terms in queries for t in terms})
-    post = index.postings.filter(F.col("term").isin(q_terms))  # parquet pushdown
+    def model(terms, stats):
+        df = {t: stats[t][0] for t in set(terms) if t in stats}
+        return BM25Model(df, doc_count, avg_doc_len, k1, b)
 
-    if grouping == "shard":
-        return _bm25_indexed_shard_grouped(
-            spark, index, queries, post, k, k1, b, span
-        )
-    matched = (
-        post.join(F.broadcast(qdf), "term")
-        .join(F.broadcast(index.term_stats.filter(F.col("term").isin(q_terms))), "term")
-        .withColumn(
-            "shard",
-            F.explode(
-                F.sequence(
-                    (F.col("start_did") / span).cast("long"),
-                    (F.col("end_did") / span).cast("long"),
-                )
-            ),
-        )
-        .select(
-            "query_id", "shard", "term", "df", "start_did", "end_did", "n",
-            "max_tf", "deltas", "tfs", "dls",
-        )
-    )
+    return _indexed_topk(spark, index, queries, model, k, n_shards, grouping)
 
-    def make_score_group(theta0_map: dict):
-        def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            qid = pdf["query_id"].iloc[0]
-            shard = int(pdf["shard"].iloc[0])
-            dids, scores = score_query_runs(
-                pdf, doc_count, avg_doc_len, k, k1, b,
-                did_lo=shard * span, did_hi=(shard + 1) * span,
-                theta0=theta0_map.get(qid, float("-inf")),
-            )
-            return pd.DataFrame({"query_id": qid, "did": dids, "score": scores})
 
-        return score_group
+def ql_dirichlet_indexed(
+    spark: SparkSession,
+    index: IndexHandle,
+    queries: list[tuple[str, list[str]]],
+    k: int = 10,
+    mu: float = 1000.0,
+    n_shards: int | None = None,
+    grouping: str = "query_shard",
+) -> DataFrame:
+    """Dirichlet-smoothed query likelihood over the inverted index
+    (``DirichletQLModel``), same plan, groupings and output as
+    ``bm25_indexed``.  Block-max pruning is off for queries with a cf=0
+    term, whose matched docs all score -inf (ties by doc_key)."""
+    token_count = index.token_count
 
-    from pyspark.sql import Window
+    def model(terms, stats):
+        term_w = {t: float(terms.count(t)) for t in set(terms)}
+        term_bg = {
+            t: (stats.get(t, (0, 0))[1] / token_count if token_count else 0.0)
+            for t in term_w
+        }
+        return DirichletQLModel(term_w, term_bg, mu)
 
-    group_schema = "query_id string, did long, score double"
-    theta0_by_query: dict[str, float] = {}
-    if seed_threshold is None:
-        # >= 8 shards AND a decode-heavy corpus: seeding's fixed seed-job
-        # cost measured as a net slowdown at 500k and 4M docs x 16 shards
-        # and its first win at 16M (BENCH/seed_threshold{,_4m}.json); it
-        # amortizes only when per-shard decode dominates job overhead
-        seed_threshold = n_shards >= 8 and index.doc_count >= _SEED_MIN_DOCS
-    if seed_threshold and n_shards > 1:
-        # metadata-only densest-shard pick: no blob columns execute
-        mass = matched.groupBy("query_id", "shard").agg(F.sum("n").alias("_mass"))
-        w0 = Window.partitionBy("query_id").orderBy(F.desc("_mass"), F.asc("shard"))
-        seed_sel = (
-            mass.withColumn("_r", F.row_number().over(w0))
-            .filter(F.col("_r") == 1)
-            .select("query_id", "shard")
-        )
-        seed_local = (
-            matched.join(F.broadcast(seed_sel), ["query_id", "shard"])
-            .groupBy("query_id", "shard")
-            .applyInPandas(make_score_group({}), group_schema)
-        )
-        for r in (
-            seed_local.groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("c"), F.min("score").alias("mn"))
-            .collect()
-        ):
-            if int(r["c"]) >= k:
-                theta0_by_query[r["query_id"]] = float(r["mn"])
-
-    local_topk = matched.groupBy("query_id", "shard").applyInPandas(
-        make_score_group(theta0_by_query), group_schema
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("did"))
-    topk = (
-        local_topk.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "did", F.col("rank").cast("int").alias("rank"), "score")
-    )
-    return _resolve_doc_keys(spark, index, topk)
+    return _indexed_topk(spark, index, queries, model, k, n_shards, grouping)

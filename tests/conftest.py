@@ -14,7 +14,9 @@ SF_SMOKE = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("simplir_spark_tests", cores=8, shuffle_partitions=8)
+    # cores=None honours $SPARK_GRAFT_CPUS (all cores when unset); shuffle
+    # partitions then follow the session's core count
+    s = get_spark("simplir_spark_tests", cores=None)
     yield s
 
 

@@ -623,79 +623,6 @@ def test_bucket_expr_forms_agree(spark):
             assert r["bs"] == r["lin"], (len(td_cuts), r)
 
 
-def test_theta0_seed_deepens_pruning_and_preserves_topk():
-    """Unit-level: an external score floor (the cross-shard seed, TopK.hs
-    single-threshold analog) must decode strictly fewer runs while
-    returning exactly the docs at-or-above the floor, in order."""
-    rng = np.random.RandomState(11)
-    n_docs, run_size = 5000, 128
-    rows = []
-    for term, df_sel, tf_hi in [("common", np.arange(n_docs), 3), ("rare", np.arange(0, 200, 10), 50)]:
-        dids = np.asarray(df_sel, dtype=np.int64)
-        tfs = rng.randint(1, tf_hi + 1, size=len(dids)).astype(np.int64)
-        dls = np.full(len(dids), 100, dtype=np.int64)
-        for s in range(0, len(dids), run_size):
-            e = min(s + run_size, len(dids))
-            run = codec.encode_run(dids[s:e], tfs[s:e], dls[s:e])
-            rows.append({"term": term, "df": len(dids), **run})
-    runs = pd.DataFrame(rows)
-
-    base_cnt = [0, 0]
-    d0, s0 = score_query_runs(
-        runs, n_docs, 100.0, 10, decode_counter=base_cnt, did_lo=0, did_hi=n_docs
-    )
-    # contract 1: a floor at our own 5th score — every returned doc
-    # at-or-above the floor matches the unseeded run, never more decodes
-    theta0 = float(s0[4])
-    seed_cnt = [0, 0]
-    d1, s1 = score_query_runs(
-        runs, n_docs, 100.0, 10, decode_counter=seed_cnt,
-        did_lo=0, did_hi=n_docs, theta0=theta0,
-    )
-    keep = s0 >= theta0
-    assert d1[: keep.sum()].tolist() == d0[keep].tolist()
-    np.testing.assert_allclose(s1[: keep.sum()], s0[keep], rtol=1e-12)
-    assert seed_cnt[0] <= base_cnt[0], (seed_cnt, base_cnt)
-
-    # contract 2: a floor above every reachable upper bound (a denser
-    # shard already holds k far better docs) must skip ALL runs — the
-    # whole point of cross-shard seeding: late shards decode nothing
-    high_cnt = [0, 0]
-    d2, s2 = score_query_runs(
-        runs, n_docs, 100.0, 10, decode_counter=high_cnt,
-        did_lo=0, did_hi=n_docs, theta0=float(s0[0]) * 2.0 + 1.0,
-    )
-    assert high_cnt[0] == 0, high_cnt
-    assert len(d2) == 0
-
-
-def test_bm25_indexed_seeded_equals_unseeded(spark, index_dir, oracle_idx):
-    """End-to-end: the seeded cross-shard threshold pass must be
-    result-invisible — identical (rank, doc_key, score) with and without
-    seeding, at several shard counts, and rank-identical to the oracle."""
-    idx = open_index(spark, index_dir)
-    for n_shards in (2, 5):
-        a = sorted(
-            (r.query_id, r.rank, r.doc_key, round(r.score, 12))
-            for r in bm25_indexed(
-                spark, idx, QUERIES, k=K, n_shards=n_shards, seed_threshold=True
-            ).collect()
-        )
-        b = sorted(
-            (r.query_id, r.rank, r.doc_key, round(r.score, 12))
-            for r in bm25_indexed(
-                spark, idx, QUERIES, k=K, n_shards=n_shards, seed_threshold=False
-            ).collect()
-        )
-        assert a == b, n_shards
-    by_q: dict[str, list] = {}
-    for qid, rank, key, _ in a:
-        by_q.setdefault(qid, []).append((rank, key))
-    for qid, terms in QUERIES:
-        want = [(rk, ky) for rk, ky, _ in bm25_topk(oracle_idx, terms, K)]
-        assert sorted(by_q.get(qid, [])) == want, qid
-
-
 def test_compact_postings_rejects_mixed_pos_buffers(spark):
     """A term whose short runs mix positional and non-positional blobs
     cannot be merged without misaligning positions — the kernel must
@@ -927,55 +854,6 @@ def test_ql_indexed_small_k_matches_scan(spark, index_dir, corpus_small):
         assert sorted(g[qid]) == sorted(w[qid]), qid
 
 
-def test_ql_theta0_seed_deepens_pruning_and_preserves_topk():
-    """An external theta0 (another shard's k-th score) must only DEEPEN
-    QL run skipping, never change results."""
-    from simplir_spark.operators.query_indexed import score_query_runs_ql
-
-    rng = np.random.RandomState(11)
-    n_docs, run_size = 4000, 128
-    rows = []
-    for term, df_sel, tf_hi in [("common", np.arange(n_docs), 3), ("rare", np.arange(0, 160, 8), 40)]:
-        dids = np.asarray(df_sel, dtype=np.int64)
-        tfs = rng.randint(1, tf_hi + 1, size=len(dids)).astype(np.int64)
-        dls = np.full(len(dids), 80, dtype=np.int64)
-        for s in range(0, len(dids), run_size):
-            e = min(s + run_size, len(dids))
-            rows.append({"term": term, **codec.encode_run(dids[s:e], tfs[s:e], dls[s:e])})
-    runs = pd.DataFrame(rows)
-    term_w = {"common": 1.0, "rare": 1.0}
-    term_bg = {"common": 0.02, "rare": 0.0002}
-
-    base_cnt = [0, 0]
-    d0, s0 = score_query_runs_ql(runs, term_w, term_bg, 1000.0, 10, 0, n_docs, decode_counter=base_cnt)
-    # seed theta0 with the true 10th score: valid global lower bound
-    theta0 = float(s0[-1])
-    cnt = [0, 0]
-    d1, s1 = score_query_runs_ql(
-        runs, term_w, term_bg, 1000.0, 10, 0, n_docs, decode_counter=cnt, theta0=theta0
-    )
-    assert d1.tolist() == d0.tolist()
-    np.testing.assert_allclose(s1, s0, rtol=1e-12)
-    assert cnt[0] <= base_cnt[0]
-    assert cnt[0] < cnt[1]
-
-
-def test_ql_indexed_seeded_equals_unseeded(spark, index_dir, corpus_small):
-    """End-to-end: seeded sharded QL == unseeded == scan ranking."""
-    from simplir_spark.operators.query_indexed import ql_dirichlet_indexed
-
-    queries = [q for q in QUERIES if q[0] not in ("Q08", "Q09", "Q14")][:5]
-    idx = open_index(spark, index_dir)
-    unseeded = ql_dirichlet_indexed(
-        spark, idx, queries, k=10, n_shards=8, seed_threshold=False
-    ).collect()
-    seeded = ql_dirichlet_indexed(
-        spark, idx, queries, k=10, n_shards=8, seed_threshold=True
-    ).collect()
-    key = lambda rows: sorted((r.query_id, r.rank, r.doc_key, round(r.score, 9)) for r in rows)
-    assert key(seeded) == key(unseeded)
-
-
 def test_bm25_indexed_shard_grouping_rank_identical(spark, index_dir, oracle_idx):
     """grouping='shard' (one group per did-shard, shared decode cache
     across queries) must be rank-identical to the default query_shard
@@ -991,6 +869,14 @@ def test_bm25_indexed_shard_grouping_rank_identical(spark, index_dir, oracle_idx
         assert [(r.rank, r.doc_key) for r in have] == [(rk, ky) for rk, ky, _ in want], qid
         for r, (_, _, sc) in zip(have, want):
             assert r.score == pytest.approx(sc, rel=REL_TOL)
+    # the default grouping at several explicit shard counts
+    for n_shards in (2, 5):
+        by_q = {}
+        for r in bm25_indexed(spark, idx, QUERIES, k=K, n_shards=n_shards).collect():
+            by_q.setdefault(r.query_id, []).append((r.rank, r.doc_key))
+        for qid, terms in QUERIES:
+            want = [(rk, ky) for rk, ky, _ in bm25_topk(oracle_idx, terms, K)]
+            assert sorted(by_q.get(qid, [])) == want, (n_shards, qid)
 
 
 def test_decode_cache_shares_across_queries():
@@ -1289,3 +1175,51 @@ def test_resolve_doc_keys_range_path_matches_isin(spark, corpus_small, index_dir
     monkeypatch.setattr(qi, "_RESOLVE_ISIN_MAX", 0)
     ranged = sorted(tuple(r) for r in qi.bm25_indexed(spark, idx, queries, k=10).collect())
     assert base == ranged and base
+
+
+def test_resolve_doc_keys_broadcast_capped_by_topk_rows(spark, index_dir, monkeypatch):
+    """The top-k side of the docmeta join is force-broadcast only while
+    queries x k stays within _RESOLVE_BROADCAST_MAX; past the cap the
+    planner chooses, and the results are unchanged."""
+    import simplir_spark.operators.query_indexed as qi
+
+    def topk_side_hinted(df) -> bool:
+        plan = df._jdf.queryExecution().analyzed()
+        while plan.nodeName() != "Join":
+            plan = plan.child()
+        return plan.right().nodeName() == "ResolvedHint"
+
+    idx = open_index(spark, index_dir)
+    queries = [("q1", ["hash", "join"]), ("q2", ["customer", "order"])]
+    hinted = qi.bm25_indexed(spark, idx, queries, k=10)
+    assert topk_side_hinted(hinted)
+    base = sorted(tuple(r) for r in hinted.collect())
+    monkeypatch.setattr(qi, "_RESOLVE_BROADCAST_MAX", len(queries) * 10 - 1)
+    capped = qi.bm25_indexed(spark, idx, queries, k=10)
+    assert not topk_side_hinted(capped)
+    assert sorted(tuple(r) for r in capped.collect()) == base and base
+
+
+def test_ql_indexed_cf0_query_matches_oracle(spark, index_dir, oracle_idx):
+    """Q14 holds a cf=0 term ("zebra"), so every matched doc scores -inf
+    and ties break by doc_key; Q08 holds only that term and matches
+    nothing.  Each shard's scorer must see ALL of a query's terms — the
+    cf=0 term has no runs anywhere — so both groupings, over several
+    shards, must return the oracle's rows."""
+    from simplir_spark.operators.query_indexed import ql_dirichlet_indexed
+    from tests.oracle import ql_dirichlet_score_all
+
+    queries = [q for q in QUERIES if q[0] in ("Q08", "Q14")]
+    idx = open_index(spark, index_dir)
+    rows = lambda df: sorted((r.query_id, r.rank, r.doc_key, r.score) for r in df.collect())
+    a = rows(ql_dirichlet_indexed(spark, idx, queries, k=K, mu=1000.0, n_shards=3))
+    b = rows(
+        ql_dirichlet_indexed(spark, idx, queries, k=K, mu=1000.0, n_shards=3, grouping="shard")
+    )
+    assert a == b
+    want = []
+    for qid, terms in queries:
+        ranked = sorted(ql_dirichlet_score_all(oracle_idx, terms, 1000.0), key=lambda sk: (-sk[0], sk[1]))
+        want += [(qid, i + 1, key, s) for i, (s, key) in enumerate(ranked[:K])]
+    assert a == sorted(want)
+    assert any(r[0] == "Q14" for r in a) and all(r[3] == float("-inf") for r in a)
